@@ -48,39 +48,8 @@ HEADLINE = [
 # components that have been flat for ≥3 rounds and were never flagged
 # by a round's regression scan rotate OUT when the census needs room —
 # their history lives in the committed BENCH_r*.json series; anything a
-# VERDICT actively tracks stays. Retired r15: fn_unpivot,
-# fn_url_extract, llm_bpe_pairs, sessionize_gap, agg_quantile_clip,
-# profile_histogram (the eqdepth sibling stays, covering the family).
-# Retired r16 (making room for the two r16 keys): layout_zorder_prune
-# (0.263/0.253/0.233 across r13-r15) and gapfill_locf_reading
-# (0.339/0.318/0.287 — the hourly + interp siblings stay, covering the
-# family); neither was ever flagged by a regression scan.
-# Retired r17 (making room for llm_index_apply_diff):
-# profile_table (1.628/1.609/1.763 across r14-r16, never flagged;
-# the approx, drift, and histogram_eqdepth siblings stay — the
-# richest-covered family in the census). Also retired r17 (making
-# room for llm_ivf_apply_diff): scd2_history (0.308/0.37/0.279/0.398
-# across r13-r16, never flagged; the merge-family sibling
-# merge_upsert stays) and gapfill_hourly (0.298/0.319/0.252/0.388,
-# never flagged; gapfill_interp_reading keeps the family's census
-# seat — the line-budget test still counts 5-component headroom).
-# Retired r18 (making room for llm_ann_ivf_pq_refine):
-# profile_drift (0.608/0.492/0.924/0.727 across r14-r17, never
-# flagged; the approx + histogram_eqdepth siblings keep the profile
-# family's census seats).
-# Retired r20 (making room for llm_ivf_list_skew, the r20 admission):
-# profile_histogram_eqdepth (0.464/0.391/0.344/0.435/0.42/0.553/0.345
-# across r13-r19, never flagged; profile_table_approx keeps the
-# profile family's census seat).
-# Admitted r22: llm_pq_codes — the pure corpus-encode key the r22
-# Arrow vectorization targets (VERDICT r21 item 1); benched so the
-# driver tracks the encode pass directly instead of only through the
-# refine/apply-diff compositions. Retired r22 (making room under the
-# line budget): llm_corpus_snapshot_diff (0.317/0.407/0.297/0.311/
-# 0.395 across r17-r21, never flagged by a regression scan; the
-# snapshot-diff family keeps TWO census seats via llm_index_apply_diff
-# and llm_ivf_apply_diff, whose maintenance paths run snapshot_diff
-# end to end).
+# VERDICT actively tracks stays. The admission/retirement log is
+# BASELINE.md's "Census history".
 COMPONENTS = [
     "llm_pq_codes",
     "stream_interval_join",

@@ -1,12 +1,13 @@
-"""Deduplication operators (reference A9 + LLM-pipeline dedup, B11).
+"""Deduplication operators (reference A9).
 
 Reference: atomic exists-check-then-insert keyed on event id with a
 300 s TTL (insert-events-into-db.lua:8-11,36-39). Batch Spark analog is
 dropDuplicates on the key; the streaming analog (same 300 s horizon as a
-watermark) lives in streaming/ingest.py.
+watermark) is dropDuplicatesWithinWatermark in plans/queries_streaming.py
+and streaming/stateful.py.
 
-LLM-pipeline dedup over documents: exact (normalized-hash groupBy) here;
-MinHash/SimHash/Jaccard near-dup in operators/neardup.py.
+LLM-pipeline document dedup (exact content hash, MinHash/SimHash
+near-dup, Jaccard verify) lives in operators/text_dedup.py.
 """
 
 from __future__ import annotations
@@ -49,30 +50,3 @@ def dedup_first_by_key(df: DataFrame, keys: list[str], order: list) -> DataFrame
         .drop("__rn")
     )
 
-
-def normalized_text_hash(col) -> "F.Column":
-    """sha2-256 of lower(trim(text)) — the exact-dedup key for documents
-    (SURVEY.md §2 B11). sha2 is standard across engines, so the oracle
-    can reproduce it bit-for-bit."""
-    return F.sha2(F.lower(F.trim(col)), 256)
-
-
-def dedup_documents_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact document dedup: group by normalized text hash, keep the
-    lowest doc_id, count copies.
-
-    At 100 TB the groupBy key is the 32-byte digest, not the document
-    body — the shuffle moves (hash, id) pairs only, thanks to column
-    pruning after the projection.
-    """
-    return (
-        docs.select(
-            normalized_text_hash(F.col(text_col)).alias("text_sha"),
-            F.col("doc_id"),
-        )
-        .groupBy("text_sha")
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )

@@ -3,10 +3,11 @@
 Image/audio/video payloads are opaque `binary` columns with a typed
 metadata struct; decode / feature-extract run as Arrow-batched
 `mapInPandas` transforms. The real codec libraries are not in this
-container, so the DECODE step itself is stubbed: `decode_media` raises
-NotImplementedError, and `fake_decode_meta` is the deterministic stand-in
-the declared queries use. Everything around the stub — schema, binary
-handling, Arrow batch shape, partitioning — is real and tested.
+container, so the DECODE step itself is stubbed: `extract_features`
+derives (width, height, n_frames) deterministically from the first
+payload bytes, the same cost shape as a real header parse. Everything
+around the stub — schema, binary handling, Arrow batch shape,
+partitioning — is real and tested.
 
 Scale posture (100 TB):
 - Binary payloads ride in the same parquet row groups as their metadata;
@@ -25,7 +26,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,29 +69,6 @@ def attach_fake_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def decode_media(payload: bytes, media_type: str):
-    """Real decode entry point — requires PIL/ffmpeg/soundfile, which
-    are not in this container. Deliberately unimplemented."""
-    raise NotImplementedError(
-        "media decoding requires codec libraries (PIL/ffmpeg) not present "
-        "in this environment; queries use fake_decode_meta, the "
-        "deterministic stand-in with the same output schema"
-    )
-
-
-def fake_decode_meta(payload: bytes, media_type: str) -> tuple[int, int, int]:
-    """Deterministic stand-in for decode: (width, height, n_frames)
-    derived from the first payload bytes. Same signature/cost-shape a
-    real decoder header-parse would have."""
-    b0 = payload[0] if len(payload) > 0 else 0
-    b1 = payload[1] if len(payload) > 1 else 0
-    b2 = payload[2] if len(payload) > 2 else 0
-    width = 1 + (b0 % 64)
-    height = 1 + (b1 % 64)
-    n_frames = 1 + (b2 % 30) if media_type == "video" else 1
-    return width, height, n_frames
-
-
 def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column via
     mapInPandas: byte length, a 16-byte prefix checksum, and the
@@ -101,8 +79,8 @@ def extract_features(media: DataFrame) -> DataFrame:
     module-level names): Spark Python workers do not inherit the
     driver's sys.path, so a closure that references this module by name
     fails to unpickle when the driver process found the engine via a
-    path entry. Nested defs are pickled by value; the decode logic is
-    therefore inlined here, kept in sync with fake_decode_meta."""
+    path entry. Nested defs are pickled by value; the decode stub is
+    therefore inlined here."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd

@@ -116,12 +116,14 @@ def _uri_parts(p: str) -> tuple[str, str]:
     schemes (hdfs://, s3a://, …) keep their authority and a
     norm-path'd path — the driver cannot realpath remote storage
     (ADVICE r20: realpath-only semantics made every remote comparison
-    silently miss)."""
+    silently miss). A location is remote only with BOTH a scheme and
+    an authority: ``data:v2/part-0`` is a relative local path whose
+    first segment holds a colon, not a ``data`` URI."""
     from urllib.parse import urlsplit
 
     parts = urlsplit(p)
-    if parts.scheme in ("", "file"):
-        local = parts.path if parts.scheme else p
+    if parts.scheme in ("", "file") or not parts.netloc:
+        local = parts.path if parts.scheme == "file" else p
         return ("file", os.path.realpath(local))
     return (
         parts.scheme,

@@ -28,7 +28,6 @@ Scale posture (100 TB / billions of vectors):
 from __future__ import annotations
 
 import hashlib
-import os
 
 import numpy as np
 import pandas as pd
@@ -185,11 +184,16 @@ def _np_model_matrix(rows, id_field: str, vec_field: str):
 
 def _np_valid_rows(vecs: "pd.Series", width: int):
     """Split an Arrow batch of vectors into (valid_idx, X) where valid
-    rows are non-null AND length-matched to the model table — exactly
-    the rows the legacy zip_with gave non-null distances for (a length
-    mismatch null-pads the zip, so every distance folds to null; a null
-    vector nulls everything). Invalid rows take the legacy null-field
-    ordering outcome, which each caller applies."""
+    rows are non-null AND length-matched to the model table — the rows
+    the join+agg reference forms (kept in the encode-parity pytest)
+    give non-null cosines for: a length mismatch null-pads the zip, so
+    every fold is null, and a null vector nulls everything. Invalid
+    rows take the reference's null-field ordering outcome, which each
+    caller applies. Two corners diverge from the slice-based PQ
+    reference, both pinned in that pytest: Arrow hands a null ELEMENT
+    over as NaN (NaN qerr, not null), and a vector LONGER than the
+    model is invalid here (code 0, null qerr) where the reference
+    slices real codes out of its first `dim` elements."""
     vals = vecs.to_numpy()
     valid = np.array(
         [v is not None and len(v) == width for v in vals], dtype=bool
@@ -226,10 +230,10 @@ def _np_pq_subcodes(X, cmat, num_subspaces: int, d_sub: int):
 def _pq_encode_udf(codebook_rows, num_subspaces: int, d_sub: int,
                    num_codewords: int):
     """pandas UDF: embedding → packed PQ code against a driver-collected
-    codebook. Value-identical to the legacy broadcast-join struct-min
-    (`_pq_codes_agg`) — pinned by the encode-parity pytest and the
+    codebook. Value-identical to the broadcast-join struct-min it
+    replaced — pinned by the encode-parity pytest and the
     sequential-model test; invalid rows (null / wrong dim) pack to 0,
-    the legacy null-distance struct-min outcome (rank 0 per subspace)."""
+    the null-distance struct-min outcome (rank 0 per subspace)."""
     _, cmat = _np_model_matrix(codebook_rows, "code_rank", "c_vec")
 
     @pandas_udf("long")
@@ -248,29 +252,11 @@ def _pq_encode_udf(codebook_rows, num_subspaces: int, d_sub: int,
     return encode
 
 
-def _pq_subcodes_udf(codebook_rows, num_subspaces: int, d_sub: int):
-    """pandas UDF: embedding → array of per-subspace code ranks (the
-    UNPACKED form `train_pq_codebook`'s recentering consumes). Same
-    argmin/tie-break core as `_pq_encode_udf`; invalid rows take rank 0
-    per subspace, the legacy null-distance struct-min outcome."""
-    _, cmat = _np_model_matrix(codebook_rows, "code_rank", "c_vec")
-
-    @pandas_udf("array<int>")
-    def subcodes(vecs: pd.Series) -> pd.Series:
-        out = np.zeros((len(vecs), num_subspaces), dtype=np.int64)
-        idx, X = _np_valid_rows(vecs, cmat.shape[1])
-        if X is not None:
-            out[idx] = _np_pq_subcodes(X, cmat, num_subspaces, d_sub)
-        return pd.Series(list(out.astype(np.int32)))
-
-    return subcodes
-
-
 def _pq_qerr_udf(codebook_rows, num_subspaces: int, d_sub: int):
     """pandas UDF: embedding → Σ_s min_r subspace squared-L2 — the
     vectorized `pq_quantization_error` body. The subspace minima and
-    their left-to-right sum are bit-identical to the legacy
-    F.min + column-add chain; invalid rows yield null (the legacy
+    their left-to-right sum are bit-identical to the F.min +
+    column-add chain it replaced; invalid rows yield null (the
     all-null-distance F.min outcome)."""
     _, cmat = _np_model_matrix(codebook_rows, "code_rank", "c_vec")
 
@@ -282,12 +268,7 @@ def _pq_qerr_udf(codebook_rows, num_subspaces: int, d_sub: int):
         if X is not None:
             total = None
             for s in range(num_subspaces):
-                lo, hi = s * d_sub, s * d_sub + d_sub
-                xs = X[:, lo:hi]
-                dist = np.empty((len(idx), len(cmat)), dtype=np.float64)
-                for r in range(len(cmat)):
-                    diff = xs - cmat[r, lo:hi]
-                    dist[:, r] = _np_fold_sum(diff * diff)
+                dist = _np_subspace_dists(X, cmat, s, d_sub)
                 dmin = dist[
                     np.arange(len(idx)),
                     np.argmin(_np_spark_order(dist), axis=1),
@@ -306,8 +287,8 @@ def _pq_qerr_udf(codebook_rows, num_subspaces: int, d_sub: int):
 
 def _ivf_assign_udf(centroid_rows, cid_type):
     """pandas UDF: embedding → nearest centroid_id against a
-    driver-collected centroid table. Value-identical to the legacy
-    broadcast-join struct-max (`_ivf_assign_agg`): NaN cosines WIN the
+    driver-collected centroid table. Value-identical to the
+    broadcast-join struct-max it replaced: NaN cosines WIN the
     max (Spark orders NaN largest) with the lowest-centroid_id
     tie-break, and invalid rows (null / wrong dim ⇒ all-null cosine)
     take the lowest centroid_id, the null-field struct-max outcome."""
@@ -582,18 +563,9 @@ def ivf_assign(
     exactly (float32 widen/narrow of collected values is lossless)."""
     centroids = ivf_seed_centroids(corpus, num_centroids, id_col, vec_col)
     rows = centroids.collect()
-    if not rows:
-        return _ivf_assign_agg(corpus, centroids, id_col, vec_col), centroids
     local = corpus.sparkSession.createDataFrame(rows, centroids.schema)
-    # assignment delegates to the shared UDF builder so the cosine
-    # argmax + tie-break lives in exactly one place
-    assign = _ivf_assign_udf(rows, centroids.schema["centroid_id"].dataType)
-    assigned = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        assign(F.col(vec_col)).alias("centroid_id"),
-    )
-    return assigned, local
+    cid_type = centroids.schema["centroid_id"].dataType
+    return _ivf_assign_rows(corpus, rows, cid_type, id_col, vec_col), local
 
 
 def ivf_seed_centroids(
@@ -763,13 +735,22 @@ def pq_codes(
     Arrow-vectorized numpy pass over the corpus — no n×C expansion, no
     join, no exchange; the corpus is scanned once and only (id, code)
     leaves the stage. The previous broadcast-join + struct-min shape
-    (`_pq_codes_agg`, kept as the empty-codebook fallback and the
-    parity-test reference) evaluated the folds INTERPRETED over C
-    copies of every vector and re-aggregated through a corpus-sized
-    exchange. Distances fold left-to-right in double, bit-matching
-    DuckDB's list sum (see `_np_fold_sum`); codes are per input ROW
-    (ids are unique by the corpus contract — the legacy groupBy
-    collapsed duplicate ids, the vectorized form preserves rows)."""
+    (kept only as the encode-parity pytest's reference) evaluated the
+    folds INTERPRETED over C copies of every vector and re-aggregated
+    through a corpus-sized exchange. Distances fold left-to-right in
+    double, bit-matching DuckDB's list sum (see `_np_fold_sum`); codes
+    are per input ROW (ids are unique by the corpus contract — the
+    legacy groupBy collapsed duplicate ids, the vectorized form
+    preserves rows). An empty codebook gives zero rows in the same
+    schema, as the inner join did.
+
+    Known divergence from that reference, pinned in the parity pytest:
+    a vector LONGER than `dim` packs to code 0 (it fails the
+    fixed-dimension check, like a null vector), where the reference's
+    per-subspace slices encode its first `dim` elements. A null
+    ELEMENT reaches numpy as NaN; that is a divergence for
+    `pq_quantization_error` only — its subspace takes rank 0 on both
+    paths, so the codes agree."""
     d_sub = dim // num_subspaces
     # A caller composing several PQ stages (ann_ivf_pq, ann_pq_adc
     # pipelines) passes the codebook it already built — Catalyst does
@@ -778,46 +759,9 @@ def pq_codes(
     if codebook is None:
         codebook = pq_codebook(corpus, num_codewords, id_col, vec_col)
     rows = codebook.select("code_rank", "c_vec").collect()
-    if not rows:
-        return _pq_codes_agg(
-            corpus, codebook, num_subspaces, d_sub, num_codewords,
-            id_col, vec_col,
-        )
     enc = _pq_encode_udf(rows, num_subspaces, d_sub, num_codewords)
-    return corpus.select(F.col(id_col), enc(F.col(vec_col)).alias("pq_code"))
-
-
-def _pq_codes_agg(
-    corpus: DataFrame,
-    codebook: DataFrame,
-    num_subspaces: int,
-    d_sub: int,
-    num_codewords: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """The legacy broadcast-join + grouped struct-min PQ assignment —
-    the reference implementation the vectorized UDF is parity-tested
-    against, and the fallback that preserves inner-join semantics for
-    an EMPTY codebook (empty output)."""
-    joined = corpus.select(id_col, vec_col).join(F.broadcast(codebook))
-    # min(struct(d, r)).r per subspace as ONE SQL parse each (r21, see
-    # _dot_sql — construction round trips); tree identical to the
-    # F.min(F.struct(sub_dist, code_rank))["r"] form it replaces.
-    codes = joined.groupBy(id_col).agg(
-        *[
-            F.expr(
-                f"min(struct({_subsq_l2_sql(vec_col, 'c_vec', s * d_sub + 1, d_sub)}"
-                " AS d, code_rank AS r)).r"
-            ).alias(f"c{s}")
-            for s in range(num_subspaces)
-        ]
-    )
-    packed = None
-    for s in range(num_subspaces):
-        term = F.col(f"c{s}").cast("long") * F.lit(num_codewords**s).cast("long")
-        packed = term if packed is None else packed + term
-    return codes.select(F.col(id_col), packed.alias("pq_code"))
+    codes = corpus.select(F.col(id_col), enc(F.col(vec_col)).alias("pq_code"))
+    return codes if rows else codes.limit(0)
 
 
 def pq_codebook(
@@ -876,42 +820,20 @@ def pq_quantization_error(
     collects to the driver and the per-subspace minima run as ONE
     Arrow-vectorized pass over the input; no expansion, no join, no
     exchange. Change-sized when fed a refresh batch, corpus-sized only
-    at build/audit time. Legacy join+agg form kept as `_pq_qerr_agg`
-    (empty-codebook fallback + parity reference)."""
+    at build/audit time. An empty codebook gives zero rows in the same
+    schema, as the join+agg form it replaced did.
+
+    Known divergences from that join+agg reference, pinned in the
+    encode-parity pytest: a NULL element inside a vector reaches numpy
+    as NaN, so its qerr is NaN where the reference's F.min gave NULL;
+    and a vector LONGER than `dim` gets a NULL qerr (invalid, like a
+    null vector) where the reference sliced a real error out of its
+    first `dim` elements."""
     d_sub = dim // num_subspaces
     rows = codebook.select("code_rank", "c_vec").collect()
-    if not rows:
-        return _pq_qerr_agg(
-            corpus, codebook, num_subspaces, d_sub, id_col, vec_col
-        )
     qerr = _pq_qerr_udf(rows, num_subspaces, d_sub)
-    return corpus.select(F.col(id_col), qerr(F.col(vec_col)).alias("qerr"))
-
-
-def _pq_qerr_agg(
-    corpus: DataFrame,
-    codebook: DataFrame,
-    num_subspaces: int,
-    d_sub: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Legacy broadcast-join + grouped-min quantization error — the
-    vectorized UDF's parity reference and empty-codebook fallback."""
-    joined = corpus.select(id_col, vec_col).join(F.broadcast(codebook))
-    per_sub = joined.groupBy(id_col).agg(
-        *[
-            F.min(
-                F.expr(_subsq_l2_sql(vec_col, "c_vec", s * d_sub + 1, d_sub))
-            ).alias(f"_d{s}")
-            for s in range(num_subspaces)
-        ]
-    )
-    total = None
-    for s in range(num_subspaces):
-        term = F.col(f"_d{s}")
-        total = term if total is None else total + term
-    return per_sub.select(F.col(id_col), total.alias("qerr"))
+    errs = corpus.select(F.col(id_col), qerr(F.col(vec_col)).alias("qerr"))
+    return errs if rows else errs.limit(0)
 
 
 def _qerr_stats(
@@ -948,32 +870,28 @@ def _adc_tables(
     codebook: DataFrame,
     num_subspaces: int,
     dim: int,
-    vec_col: str = "q_vec",
-    group_cols: tuple[str, ...] = ("qid",),
 ) -> DataFrame:
-    """ADC lookup tables: (group_cols..., t0..t{S-1}) where t_s is the
-    codeword-rank-ordered array of (`vec_col`-subvector → codeword)
+    """Per-query ADC lookup tables: (qid, t0..t{S-1}) where t_s is the
+    codeword-rank-ordered array of (q_vec-subvector → codeword)
     squared L2 distances for subspace s. Built from a broadcast
-    codebook join (group × C rows) aggregated into arrays via
-    sort_array over (rank, dist) structs. Per-QUERY tables for plain
-    ADC (group = qid, vec = q_vec); per-PROBE tables for residual
-    IVFADC (group = (qid, centroid_id), vec = the query residual).
-    Both per-subspace expression families build as single SQL parses
-    (r21, see `_dot_sql` — construction round trips), tree-identical
-    to the F.-combinator forms they replace."""
+    codebook join (Q × C rows) aggregated into arrays via sort_array
+    over (rank, dist) structs. Both per-subspace expression families
+    build as single SQL parses (r21, see `_dot_sql` — construction
+    round trips), tree-identical to the F.-combinator forms they
+    replace."""
     d_sub = dim // num_subspaces
 
     qc = q.join(F.broadcast(codebook)).select(
-        *group_cols,
+        "qid",
         "code_rank",
         *[
             F.expr(
-                _subsq_l2_sql(vec_col, "c_vec", s * d_sub + 1, d_sub)
+                _subsq_l2_sql("q_vec", "c_vec", s * d_sub + 1, d_sub)
             ).alias(f"d{s}")
             for s in range(num_subspaces)
         ],
     )
-    return qc.groupBy(*group_cols).agg(
+    return qc.groupBy("qid").agg(
         *[
             F.expr(
                 "transform(sort_array(collect_list(struct(code_rank, "
@@ -1134,18 +1052,6 @@ def _ivf_pq_build_tables(
         codebook = pq_codebook(corpus, num_codewords, id_col, vec_col)
     c_rows = centroids.collect()
     cb_rows = codebook.collect()
-    if not c_rows or not cb_rows:
-        # empty model table: keep the legacy inner-join semantics
-        # (empty lists) via the reference implementations
-        assigned = _ivf_assign_agg(corpus, centroids, id_col, vec_col)
-        codes = _pq_codes_agg(
-            corpus, codebook, num_subspaces, dim // num_subspaces,
-            num_codewords, id_col, vec_col,
-        )
-        lists = assigned.select(
-            F.col(id_col).alias("nid"), "centroid_id"
-        ).join(codes.select(F.col(id_col).alias("nid"), "pq_code"), "nid")
-        return lists, centroids, codebook
     spark = corpus.sparkSession
     centroids = spark.createDataFrame(c_rows, centroids.schema)
     codebook = spark.createDataFrame(cb_rows, codebook.schema)
@@ -1160,6 +1066,9 @@ def _ivf_pq_build_tables(
         assign(F.col(vec_col)).alias("centroid_id"),
         enc(F.col(vec_col)).alias("pq_code"),
     )
+    # an empty model table lists nothing (the inner-join semantics)
+    if not c_rows or not cb_rows:
+        lists = lists.limit(0)
     return lists, centroids, codebook
 
 
@@ -1497,12 +1406,8 @@ def _check_ivf_pq_params(
             "layout, or an in-place rebuild was interrupted between "
             "the table overwrites and the sidecar commit (the tables "
             "may mix two geometries), or the layout predates the "
-            "required sidecar (a BREAKING change since the r19 "
-            "hard-requirement — see BASELINE.md). Rebuild the index "
-            "with ivf_pq_write_index, or — for a HEALTHY pre-sidecar "
-            "layout of known geometry — backfill the sidecar once "
-            "with ivf_pq_backfill_params, which cross-checks the "
-            "stated geometry against the tables before writing"
+            "required sidecar (see BASELINE.md). Rebuild the index "
+            "with ivf_pq_write_index"
         )
     with open(sidecar) as f:
         params = json.load(f)
@@ -1527,112 +1432,6 @@ def _check_ivf_pq_params(
             "garbage under the call's; pass the parameters the index "
             "was written with (_params.json)"
         )
-
-
-def ivf_pq_backfill_params(
-    spark,
-    path: str,
-    num_centroids: int,
-    num_subspaces: int,
-    num_codewords: int,
-    dim: int,
-) -> None:
-    """One-shot `_params.json` backfill for a PRE-SIDECAR
-    `ivf_pq_write_index` layout of known geometry (ADVICE r19): the
-    sidecar became REQUIRED at probe time in r19 — a silent
-    compatibility break for layouts written before the sidecar existed,
-    which went from working-unvalidated to ValueError. A healthy such
-    layout does not need the full rebuild the error message's first
-    remedy prescribes; this helper writes the missing sidecar once,
-    after CROSS-CHECKING the stated geometry against the tables
-    themselves — a backfill that just trusted the caller would
-    re-create exactly the silently-wrong-distances hole the sidecar
-    plugs. Checks (all driver-cheap: two tiny-table reads plus one
-    column-pruned aggregate over the packed codes):
-
-    - `centroids` has exactly `num_centroids` rows;
-    - `codebook` has exactly `num_codewords` rows and `dim`-length
-      codewords;
-    - `dim` divides by `num_subspaces`;
-    - every packed code in `lists` is < num_codewords**num_subspaces
-      (a coarse but order-of-magnitude check: codes packed under more
-      subspaces or codewords overflow the stated base).
-
-    Refuses to run when a sidecar already exists (nothing to backfill —
-    and overwriting could mask a real geometry mismatch) or when the
-    layout carries maintenance generations (those can only be written
-    through sidecar-validated paths, so the sidecar cannot be missing
-    legitimately). The write is the same tmp-then-`os.replace` atomic
-    commit `ivf_pq_write_index` uses."""
-    import json
-
-    sidecar = os.path.join(path, "_params.json")
-    if os.path.exists(sidecar):
-        raise ValueError(
-            f"ivf_pq_backfill_params: {sidecar} already exists — this "
-            "layout needs no backfill. If the probe rejects it with a "
-            "geometry mismatch, the sidecar is telling the truth; "
-            "rebuild with ivf_pq_write_index instead of overwriting "
-            "the record of what the codes were packed under"
-        )
-    from .index_maintenance import _manifest_file
-
-    if os.path.exists(_manifest_file(os.path.join(path, "lists"))):
-        raise ValueError(
-            f"ivf_pq_backfill_params: {path} carries a maintenance "
-            "manifest — maintained generations are only written "
-            "through sidecar-validated paths, so a missing sidecar "
-            "here means the layout is torn, not merely pre-sidecar. "
-            "Rebuild with ivf_pq_write_index"
-        )
-    if dim % num_subspaces != 0:
-        raise ValueError(
-            f"ivf_pq_backfill_params: dim ({dim}) is not divisible by "
-            f"num_subspaces ({num_subspaces}) — no ivf_pq_write_index "
-            "layout can have this geometry"
-        )
-    n_cent = spark.read.parquet(os.path.join(path, "centroids")).count()
-    cb = spark.read.parquet(os.path.join(path, "codebook"))
-    n_code, cb_dim = cb.select(
-        F.count(F.lit(1)), F.max(F.size("c_vec"))
-    ).first()
-    max_code = (
-        spark.read.parquet(os.path.join(path, "lists"))
-        .select(F.max("pq_code"))
-        .first()[0]
-    )
-    bad = []
-    if n_cent != num_centroids:
-        bad.append(f"centroids table has {n_cent} rows, "
-                   f"stated num_centroids={num_centroids}")
-    if n_code != num_codewords:
-        bad.append(f"codebook has {n_code} rows, "
-                   f"stated num_codewords={num_codewords}")
-    if cb_dim != dim:
-        bad.append(f"codewords are {cb_dim}-dim, stated dim={dim}")
-    if max_code is not None and max_code >= num_codewords ** num_subspaces:
-        bad.append(
-            f"max packed code {max_code} >= "
-            f"{num_codewords}**{num_subspaces} — codes were packed "
-            "under a larger geometry"
-        )
-    if bad:
-        raise ValueError(
-            "ivf_pq_backfill_params: stated geometry contradicts the "
-            f"layout at {path}: " + "; ".join(bad)
-        )
-    tmp = sidecar + ".inprogress"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "num_centroids": num_centroids,
-                "num_subspaces": num_subspaces,
-                "num_codewords": num_codewords,
-                "dim": dim,
-            },
-            f,
-        )
-    os.replace(tmp, sidecar)
 
 
 def ann_ivf_pq_partitioned(
@@ -2341,314 +2140,40 @@ def ivf_assign_with_centroids(
 ) -> DataFrame:
     """`ivf_assign`'s assignment step against a CALLER-SUPPLIED
     centroid table (centroid_id, c_vec) — the hook for trained coarse
-    quantizers (e.g. `train_pq_codebook(num_subspaces=1)` full-vector
-    k-means, or `kmeans_refine_int` output mapped to vectors). Same
-    cosine argmax and tie-break as ivf_assign.
+    quantizers (e.g. `kmeans_refine_int` output mapped to vectors).
+    Same cosine argmax and tie-break as ivf_assign.
 
     The argmax is ONE Arrow-vectorized numpy pass against the
     driver-collected O(C-row) centroid table (r22, guide §4.2/§8): no
     n×C expansion, no join, no exchange — the corpus is scanned once,
     map-side, and keeps its partitioning. The r21 grouped struct-max
-    (kept as `_ivf_assign_agg`, the empty-centroids fallback and
-    parity-test reference) still expanded the corpus C-fold into
-    interpreted cosine folds and re-aggregated through a corpus-sized
-    exchange. Ordering semantics are identical: the cosine doubles are
+    (kept only as the encode-parity pytest's reference) expanded the
+    corpus C-fold into interpreted cosine folds and re-aggregated
+    through a corpus-sized exchange. Ordering semantics are identical: the cosine doubles are
     bit-equal (`_np_fold_sum`) and the argmax uses Spark's double total
     order with the lowest-centroid_id tie-break (`_np_spark_order` —
     NaN largest, ±0.0 ordered as java.lang.Double.compare). Assignments
     are per input ROW (ids unique by the corpus contract — the legacy
     groupBy collapsed duplicate ids)."""
     rows = centroids.select("centroid_id", "c_vec").collect()
-    if not rows:
-        return _ivf_assign_agg(corpus, centroids, id_col, vec_col)
-    assign = _ivf_assign_udf(rows, centroids.schema["centroid_id"].dataType)
-    return corpus.select(
+    cid_type = centroids.schema["centroid_id"].dataType
+    return _ivf_assign_rows(corpus, rows, cid_type, id_col, vec_col)
+
+
+def _ivf_assign_rows(
+    corpus: DataFrame, rows, cid_type, id_col: str, vec_col: str
+) -> DataFrame:
+    """The one assignment body of `ivf_assign` and
+    `ivf_assign_with_centroids`: (id, vec, centroid_id) against the
+    collected centroid `rows`. No centroids → zero rows in the
+    same schema (the inner join against an empty centroid table)."""
+    assign = _ivf_assign_udf(rows, cid_type)
+    assigned = corpus.select(
         F.col(id_col),
         F.col(vec_col),
         assign(F.col(vec_col)).alias("centroid_id"),
     )
-
-
-def _ivf_assign_agg(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The legacy broadcast-join + grouped struct-max assignment (r21
-    shape) — the vectorized UDF's parity reference and the fallback
-    that preserves inner-join semantics for an EMPTY centroid table
-    (empty output). Struct MAX compares (_csim, -centroid_id) with
-    Spark's double ordering (NaN largest, null smallest); the payload
-    fields after the unique centroid id are never compared."""
-    scored = corpus.join(F.broadcast(centroids)).select(
-        F.col(id_col),
-        F.col(vec_col),
-        "centroid_id",
-        cosine_cols(vec_col, "c_vec").alias("_csim"),
-    )
-    best = scored.groupBy(id_col).agg(
-        F.max(
-            F.struct(
-                F.col("_csim"),
-                (-F.col("centroid_id")).alias("_ncid"),
-                F.col("centroid_id"),
-                F.col(vec_col).alias("_vec"),
-            )
-        ).alias("_b")
-    )
-    return best.select(
-        F.col(id_col),
-        F.col("_b._vec").alias(vec_col),
-        F.col("_b.centroid_id").alias("centroid_id"),
-    )
-
-
-def ann_ivf_pq_residual(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    num_centroids: int = 16,
-    nprobe: int = 4,
-    num_subspaces: int = 8,
-    num_codewords: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_iters: int = 2,
-    coarse: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """IVF-PQ with RESIDUAL encoding — the faithful FAISS IVFADC:
-    each vector is PQ-encoded as (x − centroid(x)), not as x. The
-    residual distribution is centered and much tighter than the raw
-    vectors', so the same codebook budget spends its codewords on the
-    part of x the inverted list does NOT already explain — the
-    standard recall upgrade over raw-vector PQ at identical storage.
-
-    The price is on the query side: the ADC tables become per-PROBE,
-    not per-query — (q − centroid) differs in every probed list, so a
-    query builds `nprobe` tables of S×C entries instead of one. That
-    frame is still q × nprobe tiny rows built against broadcast
-    centroids and codebook; the corpus-side economics are unchanged
-    (lists carry only (nid, centroid_id, pq_code); the corpus never
-    shuffles; scored volume is Σ probed-list sizes).
-
-    Fully deterministic (same md5 seeding and id tie-breaks as
-    `ann_ivf_pq`). The codebook is Lloyd-TRAINED on the residuals
-    (`train_pq_codebook`, `train_iters` rounds) — residual encoding
-    without training degenerates (residuals concentrate near zero, so
-    seed-row codewords collapse most vectors onto one identical code
-    and the ranking falls to its id tie-break; measured recall 0.04
-    untrained vs trained's win in the pytest). `train_iters=0` keeps
-    the raw seeds for an A/B. Returns (qid, rnk, nid, adist).
-
-    `coarse` = a caller-supplied (assigned, centroids) pair — and it
-    is where the residual advantage actually lives: residuals are only
-    SMALL when the coarse quantizer captures the data's cluster
-    structure, so pair this with TRAINED centroids
-    (`train_pq_codebook(num_subspaces=1)` + `ivf_assign_with_
-    centroids`). Against the default md5-seed centroids the residuals
-    are as spread as the raw vectors (an arbitrary corpus point
-    explains nothing) and residual encoding cannot beat raw-vector PQ
-    — the pytest measures exactly this contrast."""
-    if coarse is not None:
-        assigned, centroids = coarse
-    else:
-        assigned, centroids = ivf_assign(corpus, num_centroids, id_col, vec_col)
-    resid = assigned.join(F.broadcast(centroids), "centroid_id").select(
-        F.col(id_col),
-        "centroid_id",
-        F.zip_with(
-            _as_double(F.col(vec_col)),
-            _as_double(F.col("c_vec")),
-            lambda x, y: x - y,
-        ).alias("_resid"),
-    )
-    codebook = (
-        train_pq_codebook(
-            resid, num_subspaces, num_codewords, dim, id_col, "_resid",
-            iters=train_iters,
-        )
-        if train_iters > 0
-        else pq_codebook(resid, num_codewords, id_col, "_resid")
-    )
-    cb_rows = codebook.collect()
-    if not cb_rows:
-        # empty codebook → legacy inner-join semantics (empty lists)
-        codes = _pq_codes_agg(
-            resid, codebook, num_subspaces, dim // num_subspaces,
-            num_codewords, id_col, "_resid",
-        )
-        lists = resid.select(F.col(id_col).alias("nid"), "centroid_id").join(
-            codes.select(F.col(id_col).alias("nid"), "pq_code"), "nid"
-        )
-    else:
-        # fused map-side encode (r22): the residual frame is planned
-        # once — (nid, centroid_id, pq_code) in one pass, no self-join
-        codebook = corpus.sparkSession.createDataFrame(
-            cb_rows, codebook.schema
-        )
-        enc = _pq_encode_udf(
-            cb_rows, num_subspaces, dim // num_subspaces, num_codewords
-        )
-        lists = resid.select(
-            F.col(id_col).alias("nid"),
-            "centroid_id",
-            enc(F.col("_resid")).alias("pq_code"),
-        )
-    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("q_vec"))
-    qc = q.join(F.broadcast(centroids)).select(
-        "qid",
-        "q_vec",
-        "centroid_id",
-        "c_vec",
-        cosine_cols("q_vec", "c_vec").alias("_csim"),
-    )
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("_csim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        qc.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= nprobe)
-        .select(
-            "qid",
-            "centroid_id",
-            F.zip_with(
-                _as_double(F.col("q_vec")),
-                _as_double(F.col("c_vec")),
-                lambda x, y: x - y,
-            ).alias("q_resid"),
-        )
-    )
-    # per-PROBE ADC tables: same idiom as plain ADC, grouped by
-    # (qid, centroid_id) over the query RESIDUAL for that probe
-    tables = _adc_tables(
-        probes,
-        codebook,
-        num_subspaces,
-        dim,
-        vec_col="q_resid",
-        group_cols=("qid", "centroid_id"),
-    )
-    scored = lists.join(F.broadcast(tables), "centroid_id").filter(
-        F.col("qid") != F.col("nid")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adist"), F.col("nid"))
-    return (
-        scored.select(
-            "qid",
-            "nid",
-            _adc_distance(num_subspaces, num_codewords).alias("adist"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "nid", "adist")
-    )
-
-
-def train_pq_codebook(
-    frame: DataFrame,
-    num_subspaces: int = 8,
-    num_codewords: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = 2,
-) -> DataFrame:
-    """Lloyd-trained PQ codebook: per subspace, `iters` rounds of
-    assign-to-nearest + recenter over the frame's subvectors, from the
-    md5-rank seeds. Returns the SAME (code_id, c_vec, code_rank) shape
-    `pq_codes`/`ann_pq_adc` consume: codeword j's full-dim c_vec is the
-    concatenation of each subspace's trained codeword j — equivalent to
-    independent per-subspace codebooks because every consumer slices
-    per subspace and never mixes them.
-
-    Training matters most for RESIDUAL encoding: residuals concentrate
-    near zero, so untrained (seed-row) codewords collapse — most
-    vectors quantize to one identical code and ADC ranking degenerates
-    to its id tie-break (measured: recall 0.04 untrained vs the
-    trained variant's win in tests/test_llm.py). Seed-row codebooks
-    stay adequate for RAW vectors, which is why `pq_codes` defaults to
-    them and keeps its engine-mirrorable oracle.
-
-    Scale/determinism shape: assignment (r22) is the vectorized
-    Arrow argmin against the per-iteration driver-collected codebook
-    (`_pq_subcodes_udf` — same math and tie-break as the legacy
-    broadcast-join struct-min, pinned by the encode-parity pytest), so
-    each round costs one map-side pass with no n×C expansion and no
-    frame⋈assigns re-attach join; recentering posexplodes subvectors
-    to (s, rank, pos) cells and averages through DECIMAL(25,10)
-    (association-order-free, so the trained codebook is bit-stable
-    across partitionings); empty codewords keep their previous value
-    via a left join.
-    """
-    d_sub = dim // num_subspaces
-    cb = pq_codebook(frame, num_codewords, id_col, vec_col)
-
-    for _ in range(iters):
-        cb_rows = cb.collect()
-        if not cb_rows:
-            return cb  # empty frame → empty codebook; nothing to train
-        cb = frame.sparkSession.createDataFrame(cb_rows, cb.schema)
-        subcodes = _pq_subcodes_udf(cb_rows, num_subspaces, d_sub)
-        # ONE posexplode of the full vector; subspace and in-subspace
-        # position derive arithmetically from the global position, and
-        # the row's assigned code for that subspace is an element_at
-        # into the assignment array computed map-side in the same pass
-        # — a single scan, no join, where the per-subspace slice/union
-        # form re-scanned the rows S times.
-        cells = frame.select(
-            subcodes(F.col(vec_col)).alias("_codes"),
-            F.posexplode(_as_double(F.col(vec_col))).alias("gpos", "val"),
-        ).select(
-            F.expr(f"gpos div {d_sub}").cast("int").alias("s"),
-            F.element_at(
-                "_codes", F.expr(f"gpos div {d_sub}").cast("int") + 1
-            ).alias("code_rank"),
-            (F.col("gpos") % d_sub).alias("pos"),
-            "val",
-        )
-        means = cells.groupBy("s", "code_rank", "pos").agg(
-            F.avg(F.col("val").cast("decimal(25,10)"))
-            .cast("double")
-            .alias("m")
-        )
-        # Recenter against the PREVIOUS codebook's full (s, rank, pos)
-        # cell grid: a (subspace, rank) pair that attracted no members
-        # keeps its previous cells — per CELL, not per rank, because a
-        # rank can be empty in one subspace and populated in another,
-        # and a rank-level fallback would drop cells and shift the
-        # reassembled vector.
-        prev_cells = cb.select(
-            "code_id",
-            "code_rank",
-            F.posexplode(_as_double(F.col("c_vec"))).alias("gpos", "old"),
-        ).select(
-            "code_id",
-            F.expr(f"gpos div {d_sub}").cast("int").alias("s"),
-            "code_rank",
-            (F.col("gpos") % d_sub).alias("pos"),
-            "old",
-        )
-        full = prev_cells.join(means, ["s", "code_rank", "pos"], "left")
-        cb = (
-            full.groupBy("code_id", "code_rank")
-            .agg(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                (F.col("s") * d_sub + F.col("pos")).alias("i"),
-                                F.coalesce(F.col("m"), F.col("old")).alias("v"),
-                            )
-                        )
-                    ),
-                    lambda st: st["v"],
-                ).alias("c_vec")
-            )
-            .localCheckpoint(eager=True)  # truncate the per-iter lineage
-        )
-    return cb
+    return assigned if rows else assigned.limit(0)
 
 
 # ----------------------------------------------------------------- evaluation

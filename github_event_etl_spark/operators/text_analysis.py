@@ -125,11 +125,6 @@ def punct_count(text: Column) -> Column:
     return F.length(F.regexp_replace(text, f"[^{PUNCT_CLASS[1:-1]}]", ""))
 
 
-def stopword_count(text: Column) -> Column:
-    toks = words(F.lower(text))
-    return F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-
-
 def mean_word_len(text: Column) -> Column:
     """Average token length, rounded to 6 (stable small-int ratio)."""
     toks = words(text)
@@ -223,11 +218,6 @@ def lang_votes_tokens(wl: Column, lang: str) -> Column:
     """Number of tokens in a pre-split lowercase array matching
     `lang`'s marker list."""
     return F.size(F.filter(wl, lambda t: t.isin(*LANG_MARKERS[lang])))
-
-
-def lang_votes(text: Column, lang: str) -> Column:
-    """Number of tokens matching `lang`'s marker list."""
-    return lang_votes_tokens(words(F.lower(text)), lang)
 
 
 def lang_id_tokens(wl: Column) -> Column:

@@ -901,57 +901,11 @@ def jaccard_ngram(text_a: Column, text_b: Column, k: int = 3) -> Column:
     )
 
 
-def jaccard_pairs_vec(k: int = 3):
-    """Arrow-vectorized two-text k-gram Jaccard — the fused verify-step
-    twin of `jaccard_ngram`, value-identical (parity test in
-    tests/test_llm.py). Same rationale as `minhash_band_buckets_vec`:
-    the expression form's HOF tree costs more in per-plan catalyst
-    analysis than the whole verify costs to execute; this is one
-    ArrowEvalPython projection over the (tiny) candidate-pair set.
-
-    Rounding: round-HALF-UP at 6 decimals via floor(x·1e6 + 0.5). On
-    power-of-two unions the double arithmetic is exact and this is
-    bit-identical to Spark's BigDecimal HALF_UP / DuckDB's round; for
-    reduced-ratio denominators of the form 128·5^b (union 640, 3200,
-    …) the two policies CAN differ by exactly 1e-6 at half-ulp ties
-    (ADVICE r21 — the rounding-policy fuzz test documents this). The
-    PRODUCTION verify paths all use the F.round policy
-    (`jaccard_ngram` / `jaccard_shingle_sets`, the one the DuckDB
-    oracle mirrors); this UDF is the per-pair parity witness for
-    tokenization, kept out of any declared plan."""
-    import re
-
-    ws = re.compile(r"[ \t\n\x0B\f\r]+")
-
-    def shingle_set(t):
-        if t is None:
-            return frozenset()
-        toks = ws.split(t.strip(" "))
-        n = len(toks) - (k - 1)
-        if n <= 0:
-            return frozenset()
-        return {" ".join(toks[i : i + k]) for i in range(n)}
-
-    @pandas_udf(T.DoubleType())
-    def jac(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        import math
-
-        out = np.empty(len(ta), dtype=np.float64)
-        for i, (a, b) in enumerate(zip(ta, tb)):
-            sa, sb = shingle_set(a), shingle_set(b)
-            union = len(sa | sb)
-            j = (len(sa & sb) / union) if union else 0.0
-            out[i] = math.floor(j * 1e6 + 0.5) / 1e6
-        return pd.Series(out)
-
-    return jac
-
-
 def shingle_sets_vec(k: int = 3):
     """Arrow-vectorized text → DISTINCT word-k-gram set as an INT64
     array: the per-DOC half of the split candidate verification (r21;
-    hashed r22). Tokenization is byte-identical to
-    `jaccard_pairs_vec`'s (ASCII-space strip, Java `\\s` class split);
+    hashed r22). Tokenization is byte-identical to `words` (Spark's
+    `trim` strips ASCII spaces only; the split is the Java `\\s` class);
     each distinct shingle string is then mapped to a deterministic
     64-bit hash (pandas' SipHash — stable across workers, retries and
     sessions, independent of PYTHONHASHSEED), so what travels through
@@ -1003,14 +957,13 @@ def jaccard_shingle_sets(sa: Column, sb: Column) -> Column:
     Python boundary, no per-pair re-tokenization). Rounding is
     `F.round(_, 6)` — Spark's BigDecimal HALF_UP, the same policy as
     the expression twin `jaccard_ngram` (and as the DuckDB oracle's
-    round). vs `jaccard_pairs_vec`'s floor(x·1e6 + 0.5): the two agree
-    whenever the 6th-decimal tie digit is exactly representable, which
-    covers power-of-two unions; for reduced-ratio denominators of the
-    form 128·5^b (union 640, 3200, …) the double is inexact and the
-    two policies could in principle differ by 1e-6 at an exact
-    half-ulp tie — HALF_UP on the double Spark actually computed is
-    the one the oracle mirrors, and the jaccard parity tests fuzz
-    these denominators to document the agreement on real ratios."""
+    round). A floor(x·1e6 + 0.5) policy agrees whenever the
+    6th-decimal tie digit is exactly representable, which covers
+    power-of-two unions; for reduced-ratio denominators of the form
+    128·5^b (union 640, 3200, …) the double is inexact and the two
+    policies can differ by 1e-6 at an exact half-ulp tie — HALF_UP on
+    the double Spark actually computed is the one the oracle mirrors
+    (pinned by the rounding-policy pytest)."""
     inter = F.size(F.array_intersect(sa, sb))
     union = F.size(F.array_union(sa, sb))
     return F.round(
@@ -1045,8 +998,8 @@ def verify_pairs_jaccard(
     shingling the non-candidate docs saves; see OPTIMIZATION_r22.md.)
     The joined payload is the doc's HASHED shingle set (int64 per
     shingle, r22 — see `shingle_sets_vec`), so the pair joins shuffle
-    8 bytes per shingle instead of strings (`jaccard_pairs_vec` stays
-    as the per-pair parity witness)."""
+    8 bytes per shingle instead of strings (`jaccard_ngram` is the
+    per-pair parity witness)."""
     sh_vec = shingle_sets_vec(k)
     sets = docs.select(F.col("doc_id"), sh_vec(F.col(text_col)).alias("_s"))
     return (

@@ -80,7 +80,7 @@ _CHANGED_THIS_ROUND: frozenset[str] = frozenset({
     # output), topk_salts defaults to None on every probe entry point
     # (and is result-identical when set, pinned by pytest), the
     # static_prune='auto' rework touches only the non-catalog auto
-    # mode, and ivf_pq_backfill_params is a new migration helper.
+    # mode.
     # (r19's entry, llm_ann_recall_eval, self-cleared: green in r19.)
 })
 

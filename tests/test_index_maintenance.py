@@ -2116,6 +2116,25 @@ def test_under_path_compares_scheme_qualified_uris():
         assert not _under_path(("/elsewhere/idx",), "/warehouse/idx")
 
 
+def test_uri_parts_reads_colon_relative_path_as_local():
+    """A relative local path whose first segment holds a colon
+    (`data:v2/part-0`) has a scheme but no authority: it is local and
+    realpath'd against the working directory, never a remote `data`
+    URI. Bare, `file:` and authority-qualified remote forms keep their
+    results."""
+    import os
+
+    from github_event_etl_spark.operators.plan_metrics import _uri_parts
+
+    assert _uri_parts("data:v2/part-0") == (
+        "file", os.path.realpath("data:v2/part-0")
+    )
+    assert _uri_parts("/tmp/x") == ("file", os.path.realpath("/tmp/x"))
+    assert _uri_parts("file:/tmp/x") == ("file", os.path.realpath("/tmp/x"))
+    assert _uri_parts("hdfs://nn:8020/a/b") == ("hdfs", "//nn:8020/a/b")
+    assert _uri_parts("s3a://bkt/a") == ("s3a", "//bkt/a")
+
+
 def test_ivf_pq_refresh_defaults_geometry_from_sidecar(spark, tmp_path):
     """ADVICE r20: `ivf_pq_refresh_from_change_stream` must default
     num_subspaces/num_codewords/dim from the layout's _params.json

@@ -14,7 +14,6 @@ from . import conftest
 
 from github_event_etl_spark.operators.multimodal import (
     attach_fake_media,
-    decode_media,
     extract_features,
     sample_frames,
 )
@@ -208,46 +207,6 @@ def test_minhash_vec_bands_match_expression_form(spark, docs):
         assert [tuple(x) for x in r.e] == [tuple(x) for x in r.v], r.doc_id
 
 
-def test_jaccard_vec_matches_expression_form(spark, docs):
-    """The Arrow-fused pair-Jaccard must equal `jaccard_ngram`
-    value-for-value, edge rows included."""
-    from github_event_etl_spark.operators.text_dedup import (
-        jaccard_ngram,
-        jaccard_pairs_vec,
-    )
-
-    edge = spark.createDataFrame(
-        [
-            (None, None),
-            (None, "three word doc"),
-            ("", "   "),
-            ("one two", "one two"),
-            ("a b c d", "a  b\tc\nd"),
-            ("x y z", "x y z"),
-        ],
-        "ta string, tb string",
-    )
-    base = docs.limit(150)
-    pairs = (
-        base.select(F.col("text").alias("ta"))
-        .withColumn("_r", F.monotonically_increasing_id())
-        .join(
-            base.select(F.col("text").alias("tb")).withColumn(
-                "_r", F.monotonically_increasing_id() + 1
-            ),
-            "_r",
-        )
-        .select("ta", "tb")
-        .unionByName(edge)
-    )
-    rows = pairs.select(
-        jaccard_ngram(F.col("ta"), F.col("tb")).alias("e"),
-        jaccard_pairs_vec(3)(F.col("ta"), F.col("tb")).alias("v"),
-    ).collect()
-    for r in rows:
-        assert r.e == r.v, (r.e, r.v)
-
-
 def test_jaccard_split_verify_matches_expression_form(spark, docs):
     """The split verify path (per-doc `shingle_sets_vec` — hashed int64
     shingles — scored by `jaccard_shingle_sets`) must equal the
@@ -300,7 +259,7 @@ def test_jaccard_rounding_policy_on_tie_denominators(spark):
     denominators 128·5^b (union 640, 3200, …) Spark's BigDecimal
     HALF_UP (`F.round` — the policy of EVERY production verify path
     and of the DuckDB oracle) differs from floor(x·1e6 + 0.5) (the
-    `jaccard_pairs_vec` witness policy) by EXACTLY 1e-6, and only at
+    floating-point half-up policy) by EXACTLY 1e-6, and only at
     half-ulp ties; on power-of-two denominators they are identical."""
     import math
 
@@ -725,11 +684,6 @@ def test_quality_score_bounds(docs):
 
 
 # -------------------------------------------------------------- multimodal
-
-
-def test_decode_media_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\x89PNG", "image")
 
 
 def test_media_features_deterministic(docs):
@@ -1689,67 +1643,6 @@ def test_auto_mode_ignores_unrelated_partitioned_scans(
     auto.unpersist()
 
 
-def test_ivf_pq_backfill_params_restores_pre_sidecar_layout(
-    emb, spark, tmp_path
-):
-    """The r19 sidecar hard-requirement broke PRE-sidecar layouts
-    (working-unvalidated → ValueError at probe time; ADVICE r19).
-    `ivf_pq_backfill_params` is the documented one-shot migration for
-    a HEALTHY such layout of known geometry: it cross-checks the
-    stated geometry against the tables (refusing every contradiction,
-    so a backfill cannot re-open the silent-wrong-distances hole),
-    writes the sidecar once, and probes serve again — no full rebuild.
-    It refuses to overwrite an existing sidecar and refuses layouts
-    carrying maintenance manifests (those cannot legitimately lack a
-    sidecar)."""
-    import os
-
-    from github_event_etl_spark.operators.similarity import (
-        ann_ivf_pq,
-        ann_ivf_pq_partitioned,
-        ivf_pq_backfill_params,
-        ivf_pq_write_index,
-    )
-
-    path = str(tmp_path / "ivfpq")
-    ivf_pq_write_index(emb, path)
-    with pytest.raises(ValueError, match="already exists"):
-        ivf_pq_backfill_params(spark, path, 16, 8, 16, 64)
-    os.remove(os.path.join(path, "_params.json"))  # pre-sidecar layout
-
-    qs = emb.filter(F.col("vec_id") < 4)
-    # the probe's refusal names the migration path
-    with pytest.raises(ValueError, match="ivf_pq_backfill_params"):
-        ann_ivf_pq_partitioned(spark, path, qs, k=5, nprobe=4)
-    # every stated-geometry contradiction is refused, named
-    with pytest.raises(ValueError, match="codebook has 16 rows"):
-        ivf_pq_backfill_params(spark, path, 16, 8, 32, 64)
-    with pytest.raises(ValueError, match="centroids table has 16"):
-        ivf_pq_backfill_params(spark, path, 8, 8, 16, 64)
-    with pytest.raises(ValueError, match="not divisible"):
-        ivf_pq_backfill_params(spark, path, 16, 7, 16, 64)
-    with pytest.raises(ValueError, match="larger geometry"):
-        ivf_pq_backfill_params(spark, path, 16, 4, 16, 64)
-    # the true geometry backfills once, and the layout serves again
-    ivf_pq_backfill_params(spark, path, 16, 8, 16, 64)
-    got = {
-        tuple(r)
-        for r in ann_ivf_pq_partitioned(
-            spark, path, qs, k=5, nprobe=4
-        ).collect()
-    }
-    mem = ann_ivf_pq(emb, qs, k=5, nprobe=4, num_centroids=16)
-    assert got == {tuple(r) for r in mem.collect()} and got
-
-    # a maintained layout missing its sidecar is TORN, not pre-sidecar
-    os.remove(os.path.join(path, "_params.json"))
-    os.makedirs(os.path.join(path, "lists"), exist_ok=True)
-    with open(os.path.join(path, "lists", "_manifest.json"), "w") as f:
-        f.write("{}")
-    with pytest.raises(ValueError, match="maintenance manifest"):
-        ivf_pq_backfill_params(spark, path, 16, 8, 16, 64)
-
-
 def test_ivf_pq_geometry_error_names_the_entry_point(
     emb, spark, tmp_path
 ):
@@ -2079,66 +1972,6 @@ def test_learn_bpe_rejects_zero_merges(spark):
         learn_bpe(docs, 0)
 
 
-def test_ivfadc_residual_encoding_beats_raw_with_trained_coarse(spark):
-    """The faithful IVFADC claim, measured: residual PQ encoding beats
-    raw-vector PQ ONLY when the coarse quantizer captures the data's
-    cluster structure. On deterministic clustered vectors with Lloyd-
-    trained centroids (train_pq_codebook at num_subspaces=1) +
-    residual codes, the ADC distance-approximation error must fall
-    far below raw-vector PQ's (measured ~25x; asserted 5x) and recall
-    must not regress; with the default md5-seed coarse quantizer the
-    residuals are as spread as the data and the advantage must vanish
-    — both sides of the theory pinned."""
-    import numpy as np
-
-    from github_event_etl_spark.operators.similarity import (
-        ann_ivf_pq,
-        ann_ivf_pq_residual,
-        ivf_assign_with_centroids,
-        knn_bruteforce,
-        train_pq_codebook,
-    )
-
-    rng = np.random.RandomState(7)
-    centers = rng.randn(16, 64)
-    pts = np.vstack([c + 0.15 * rng.randn(32, 64) for c in centers])
-    cemb = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in enumerate(pts)],
-        "vec_id long, embedding array<double>",
-    )
-    qs = cemb.filter(F.col("vec_id") % 67 == 0)
-    E = {i: pts[i] for i in range(len(pts))}
-
-    def err_and_pairs(df):
-        rows = df.collect()
-        errs = [
-            abs(r.adist - float(((E[r.qid] - E[r.nid]) ** 2).sum()))
-            for r in rows
-        ]
-        return sum(errs) / len(errs), {(r.qid, r.nid) for r in rows}
-
-    cents = train_pq_codebook(
-        cemb, num_subspaces=1, num_codewords=16, dim=64, iters=3
-    )
-    centroids = cents.select(F.col("code_id").alias("centroid_id"), "c_vec")
-    assigned = ivf_assign_with_centroids(cemb, centroids)
-
-    bf = {(r.qid, r.nid) for r in knn_bruteforce(cemb, qs, k=10).collect()}
-    e_raw, p_raw = err_and_pairs(ann_ivf_pq(cemb, qs, k=10))
-    e_res, p_res = err_and_pairs(
-        ann_ivf_pq_residual(
-            cemb, qs, k=10, train_iters=2, coarse=(assigned, centroids)
-        )
-    )
-    e_res_md5, _ = err_and_pairs(
-        ann_ivf_pq_residual(cemb, qs, k=10, train_iters=2)
-    )
-    assert e_res < e_raw / 5, (e_res, e_raw)
-    assert len(bf & p_res) >= len(bf & p_raw)
-    # md5-seed coarse quantizer: residuals stay raw-spread, advantage gone
-    assert e_res_md5 > e_res * 10, (e_res_md5, e_res)
-
-
 # ------------------------------------------------- semantic dedup clusters
 
 
@@ -2411,7 +2244,7 @@ def test_chunk_overlap_covers_and_reconstructs(spark, sf_dir):
 
     # mirror BOTH engines' tokenization exactly: ASCII-space-only trim
     # + the Java \s class — .strip().split() would diverge on texts
-    # with leading tabs/newlines (same rule as jaccard_pairs_vec)
+    # with leading tabs/newlines (same rule as shingle_sets_vec)
     ws = re.compile(r"[ \t\n\x0B\f\r]+")
 
     docs = {
@@ -3557,30 +3390,118 @@ def test_ivf_pq_apply_diff_equals_rebuild_and_plan_gates(spark, sf_dir):
     assert tree.count("SortMergeJoin") == 0, tree
 
 
+# The broadcast-join + grouped-aggregate encoders that the vectorized
+# similarity.py encode replaced. They live here only as the reference
+# forms the parity test below compares against.
+
+
+def _ref_pq_codes(corpus, codebook, num_subspaces, d_sub, num_codewords):
+    """Grouped struct-min PQ assignment: per subspace the (distance,
+    code_rank) minimum, packed base `num_codewords`."""
+    from github_event_etl_spark.operators.similarity import _subsq_l2_sql
+
+    joined = corpus.select("vec_id", "embedding").join(F.broadcast(codebook))
+    codes = joined.groupBy("vec_id").agg(
+        *[
+            F.expr(
+                "min(struct("
+                f"{_subsq_l2_sql('embedding', 'c_vec', s * d_sub + 1, d_sub)}"
+                " AS d, code_rank AS r)).r"
+            ).alias(f"c{s}")
+            for s in range(num_subspaces)
+        ]
+    )
+    packed = None
+    for s in range(num_subspaces):
+        term = F.col(f"c{s}").cast("long") * F.lit(num_codewords**s).cast("long")
+        packed = term if packed is None else packed + term
+    return codes.select("vec_id", packed.alias("pq_code"))
+
+
+def _ref_pq_qerr(corpus, codebook, num_subspaces, d_sub):
+    """Grouped-min quantization error: Σ_s min_r subspace squared L2."""
+    from github_event_etl_spark.operators.similarity import _subsq_l2_sql
+
+    joined = corpus.select("vec_id", "embedding").join(F.broadcast(codebook))
+    per_sub = joined.groupBy("vec_id").agg(
+        *[
+            F.min(
+                F.expr(
+                    _subsq_l2_sql("embedding", "c_vec", s * d_sub + 1, d_sub)
+                )
+            ).alias(f"_d{s}")
+            for s in range(num_subspaces)
+        ]
+    )
+    total = None
+    for s in range(num_subspaces):
+        total = F.col(f"_d{s}") if total is None else total + F.col(f"_d{s}")
+    return per_sub.select("vec_id", total.alias("qerr"))
+
+
+def _ref_ivf_assign(corpus, centroids):
+    """Grouped struct-max centroid assignment: compares
+    (cosine, -centroid_id) with Spark's double ordering (NaN largest,
+    null smallest); the payload after the unique centroid id is never
+    compared."""
+    from github_event_etl_spark.operators.similarity import cosine_cols
+
+    scored = corpus.join(F.broadcast(centroids)).select(
+        "vec_id",
+        "embedding",
+        "centroid_id",
+        cosine_cols("embedding", "c_vec").alias("_csim"),
+    )
+    best = scored.groupBy("vec_id").agg(
+        F.max(
+            F.struct(
+                F.col("_csim"),
+                (-F.col("centroid_id")).alias("_ncid"),
+                F.col("centroid_id"),
+                F.col("embedding").alias("_vec"),
+            )
+        ).alias("_b")
+    )
+    return best.select(
+        "vec_id",
+        F.col("_b._vec").alias("embedding"),
+        F.col("_b.centroid_id").alias("centroid_id"),
+    )
+
+
 def test_vectorized_encode_parity_with_legacy_agg(spark):
     """The r22 Arrow-vectorized encode paths (PQ code assignment, IVF
     centroid assignment, quantization error) must be VALUE-IDENTICAL to
-    the legacy broadcast-join aggregations they replaced — on ordinary
-    vectors AND the adversarial corners the struct-min/max tie-break
-    rules exist for: exact ties (duplicate vectors, a vector that IS a
-    codeword), zero vectors (all-NaN cosine ⇒ NaN wins the max, lowest
-    centroid id), NaN elements (NaN distance loses every min, wins
-    every max), null vectors and wrong-dimension vectors (all-null
-    folds ⇒ lowest id / code 0 / null qerr).
+    the join+agg reference forms above — on ordinary vectors AND the
+    adversarial corners the struct-min/max tie-break rules exist for:
+    exact ties (duplicate vectors, a vector that IS a codeword), zero
+    vectors (all-NaN cosine ⇒ NaN wins the max, lowest centroid id),
+    NaN elements (NaN distance loses every min, wins every max), null
+    vectors and wrong-dimension vectors (all-null folds ⇒ lowest id /
+    code 0 / null qerr).
 
-    Zero-norm vectors are compared on the PQ paths only: the legacy
+    Zero-norm vectors are compared on the PQ paths only: the reference
     cosine ASSIGNMENT raises DIVIDE_BY_ZERO under Spark 4 ANSI for a
     0/0 norm product, while the vectorized path implements the
     ordering the operators document (NaN cosine wins the max ⇒ lowest
-    centroid id) — asserted separately below."""
+    centroid id) — asserted separately below.
+
+    Two known divergences are pinned, not hidden: a NULL element
+    inside a vector gives a NaN qerr (Arrow hands it to numpy as NaN)
+    where the reference gives NULL, and a vector LONGER than `dim`
+    gets code 0 and a NULL qerr where the reference slices real ones
+    out of its first `dim` elements.
+
+    An empty corpus and an empty model table give zero rows in the
+    non-empty path's column names and types — the schema the
+    reference inner join gives."""
     import math
 
     from pyspark.sql import types as T
 
     from github_event_etl_spark.operators.similarity import (
-        _ivf_assign_agg,
-        _pq_codes_agg,
-        _pq_qerr_agg,
+        ann_ivf_pq,
+        ivf_assign,
         ivf_assign_with_centroids,
         ivf_seed_centroids,
         pq_codebook,
@@ -3602,6 +3523,8 @@ def test_vectorized_encode_parity_with_legacy_agg(spark):
             (103, None),                 # null vector
             (104, [1.0] * (dim // 2)),   # wrong dimension
             (105, [-0.0] * dim),         # negative zeros
+            (106, [None] + [1.0] * (dim - 1)),  # null element (diverges)
+            (107, base[5] + [9.0, 9.0]),  # longer than dim (diverges)
         ]
     )
     schema = T.StructType([
@@ -3609,15 +3532,16 @@ def test_vectorized_encode_parity_with_legacy_agg(spark):
         T.StructField("embedding", T.ArrayType(T.FloatType())),
     ])
     df = spark.createDataFrame(vecs, schema)
-    cents = ivf_seed_centroids(df.filter(F.col("vec_id") < 50), cw)
-    cb = pq_codebook(df.filter(F.col("vec_id") < 50), cw)
+    clean = df.filter(F.col("vec_id") < 50)
+    cents = ivf_seed_centroids(clean, cw)
+    cb = pq_codebook(clean, cw)
 
     nonzero = df.filter(~F.col("vec_id").isin(101, 105))
     new_asg = {
         r[0]: r[2]
         for r in ivf_assign_with_centroids(nonzero, cents).collect()
     }
-    old_asg = {r[0]: r[2] for r in _ivf_assign_agg(nonzero, cents).collect()}
+    old_asg = {r[0]: r[2] for r in _ref_ivf_assign(nonzero, cents).collect()}
     assert new_asg == old_asg
     # zero-norm vectors: the documented NaN-wins-the-max outcome
     min_cid = min(r[0] for r in cents.collect())
@@ -3635,10 +3559,12 @@ def test_vectorized_encode_parity_with_legacy_agg(spark):
     }
     old_codes = {
         r[0]: r[1]
-        for r in _pq_codes_agg(
-            df, cb, subs, dim // subs, cw, "vec_id", "embedding"
-        ).collect()
+        for r in _ref_pq_codes(df, cb, subs, dim // subs, cw).collect()
     }
+    # divergence: a longer-than-dim vector is invalid to the vectorized
+    # encode (code 0); the reference encodes its first dim elements
+    assert new_codes.pop(107) == 0
+    assert old_codes.pop(107) == old_codes[5] != 0
     assert new_codes == old_codes
 
     new_q = {
@@ -3646,10 +3572,13 @@ def test_vectorized_encode_parity_with_legacy_agg(spark):
     }
     old_q = {
         r[0]: r[1]
-        for r in _pq_qerr_agg(
-            df, cb, subs, dim // subs, "vec_id", "embedding"
-        ).collect()
+        for r in _ref_pq_qerr(df, cb, subs, dim // subs).collect()
     }
+    # divergences: null element → NaN (reference NULL); longer than
+    # dim → NULL (reference: the first dim elements' real error)
+    assert math.isnan(new_q.pop(106)) and old_q.pop(106) is None
+    assert new_q.pop(107) is None
+    assert old_q.pop(107) == old_q[5] is not None
     assert set(new_q) == set(old_q)
     for k in new_q:
         a, b = new_q[k], old_q[k]
@@ -3657,6 +3586,45 @@ def test_vectorized_encode_parity_with_legacy_agg(spark):
             isinstance(a, float) and isinstance(b, float)
             and math.isnan(a) and math.isnan(b)
         ), (k, a, b)
+
+    # empty corpus / empty model table: zero rows, same schema
+    def shape(frame):
+        return [(f.name, f.dataType) for f in frame.schema]
+
+    empty = clean.limit(0)
+    no_cb, no_cents = cb.limit(0), cents.limit(0)
+    qs = clean.filter(F.col("vec_id") < 3)
+    geo = dict(num_centroids=cw, num_subspaces=subs, num_codewords=cw,
+               dim=dim)
+    cases = [
+        (
+            pq_codes(clean, subs, cw, dim, codebook=cb),
+            [pq_codes(clean, subs, cw, dim, codebook=no_cb),
+             pq_codes(empty, subs, cw, dim)],
+            _ref_pq_codes(clean, no_cb, subs, dim // subs, cw),
+        ),
+        (
+            pq_quantization_error(clean, cb, subs, dim),
+            [pq_quantization_error(clean, no_cb, subs, dim),
+             pq_quantization_error(empty, no_cb, subs, dim)],
+            _ref_pq_qerr(clean, no_cb, subs, dim // subs),
+        ),
+        (
+            ivf_assign_with_centroids(clean, cents),
+            [ivf_assign_with_centroids(clean, no_cents),
+             ivf_assign_with_centroids(empty, cents)],
+            _ref_ivf_assign(clean, no_cents),
+        ),
+        (ivf_assign(clean, cw)[0], [ivf_assign(empty, cw)[0]], None),
+        (ann_ivf_pq(clean, qs, k=3, **geo), [ann_ivf_pq(empty, qs, k=3, **geo)],
+         None),
+    ]
+    for full, empties, ref in cases:
+        for e in empties:
+            assert shape(e) == shape(full), (shape(e), shape(full))
+            assert e.count() == 0
+        if ref is not None:
+            assert shape(ref) == shape(full), (shape(ref), shape(full))
 
 
 def test_embed_random_projection_distortion_bounds(spark, sf_dir):

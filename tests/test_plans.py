@@ -629,8 +629,8 @@ def test_pq_codes_is_single_mapside_arrow_pass(qmap, spark, sf_dir):
     single ArrowEvalPython — no join, no n×C expansion, no exchange, no
     window, no aggregate. The corpus is touched exactly once and never
     shuffles. (The legacy broadcast-join + struct-min shape survives as
-    `_pq_codes_agg`, pinned value-identical by the encode-parity
-    pytest.)"""
+    the encode-parity pytest's reference form, pinned value-identical
+    there.)"""
     tree = tree_of(plan_of(qmap, spark, sf_dir, "llm_pq_codes"))
     assert tree.count("ArrowEvalPython") == 1
     assert "Join" not in tree
